@@ -205,58 +205,32 @@ def incremental_merge(
 
     staged = stage_changes(extract, spec, watermark)
 
-    staged_for_inserts = staged
     if stats is not None:
         from pyspark.sql import Observation
 
-        if stats.pop("_defer_staged_counts", False):
-            # zero-job variant (r14): the staged counts ride the caller's
-            # write action as an observation on the INSERTS branch —
-            # placed below the REMOVE filter so REMOVEs are counted, and
-            # NOT on the broadcast-keys branch, which executes as its own
-            # broadcast-build job and would double the metrics. Resolved
-            # by finalize_merge_stats into staged_count/inserted_count
-            # plus _staged_max_ts (the caller folds that into
-            # next_watermark — only it knows the current watermark).
-            obs_staged = Observation()
-            staged_for_inserts = staged.observe(
-                obs_staged,
-                F.count(F.lit(1)).alias("n"),
-                F.count(F.when(F.col("eventName") == "REMOVE", 1)).alias("r"),
-                F.max(
-                    F.when(
-                        F.col("eventName") != "REMOVE",
-                        F.col("approximateUpdateTimestamp"),
-                    )
-                ).alias("mx"),
-            )
-            stats["_obs_staged"] = obs_staged
-        elif "staged_count" not in stats:
-            # one combined agg job over the micro-batch-sized staged set
-            # (skipped when the caller already derived the counts — the
-            # partitioned backend fuses them into its touched-buckets
-            # aggregate so the merge costs one fewer job)
-            counts = staged.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count(F.when(F.col("eventName") == "REMOVE", 1)).alias("r"),
-                # post-merge in-table watermark (MAX ts of inserted rows)
-                # as a rider column — lets a long-lived caller carry the
-                # watermark forward and skip the next refresh's MAX(ts)
-                # table scan (see PartitionedParquetTable.merge)
-                F.max(
-                    F.when(
-                        F.col("eventName") != "REMOVE",
-                        F.col("approximateUpdateTimestamp"),
-                    )
-                ).alias("mx"),
-            ).first()
-            stats.update(
-                staged_count=counts["n"],
-                inserted_count=counts["n"] - counts["r"],
-                next_watermark=(
-                    max(watermark, counts["mx"]) if counts["mx"] else watermark
-                ),
-            )
+        # one combined agg job over the micro-batch-sized staged set (on
+        # the partitioned backend it reads the plan merge() persisted)
+        counts = staged.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("eventName") == "REMOVE", 1)).alias("r"),
+            # post-merge in-table watermark (MAX ts of inserted rows)
+            # as a rider column — lets a long-lived caller carry the
+            # watermark forward and skip the next refresh's MAX(ts)
+            # table scan (see PartitionedParquetTable.merge)
+            F.max(
+                F.when(
+                    F.col("eventName") != "REMOVE",
+                    F.col("approximateUpdateTimestamp"),
+                )
+            ).alias("mx"),
+        ).first()
+        stats.update(
+            staged_count=counts["n"],
+            inserted_count=counts["n"] - counts["r"],
+            next_watermark=(
+                max(watermark, counts["mx"]) if counts["mx"] else watermark
+            ),
+        )
         # deleted = |target slice| - |survivors|, both observed for free
         # during the caller's write action (neither node is in the
         # broadcast-keys branch, so each executes exactly once per action)
@@ -278,7 +252,7 @@ def incremental_merge(
         )
 
     inserts = (
-        staged_for_inserts.filter(F.col("eventName") != F.lit("REMOVE"))
+        staged.filter(F.col("eventName") != F.lit("REMOVE"))
         .withColumn(
             "syncTimestamp",
             F.lit(sync_ts).cast("timestamp") if sync_ts else F.current_timestamp(),
@@ -305,33 +279,26 @@ def finalize_merge_stats(stats: dict, timeout_s: float = 60.0) -> dict:
 
     obs_target = stats.pop("_obs_target", None)
     obs_survivors = stats.pop("_obs_survivors", None)
-    obs_staged = stats.pop("_obs_staged", None)
+    if obs_target is None or obs_survivors is None:
+        return stats
 
     deadline = time.monotonic() + timeout_s
 
-    def _metrics(obs) -> dict | None:
+    def _metric_n(obs) -> int | None:
         jo = getattr(obs, "_jo", None)
         if jo is None:  # never attached via .observe — no action can fire it
             return None
         while True:
             if jo.getRowOrEmpty().isDefined():
-                return obs.get  # metrics present: this cannot block
+                return obs.get["n"]  # metrics present: this cannot block
             if time.monotonic() >= deadline:
                 return None
 
-    if obs_staged is not None:
-        # deferred staged counts (see incremental_merge): same write action
-        # carried them, zero extra jobs
-        m = _metrics(obs_staged)
-        stats["staged_count"] = m["n"] if m else None
-        stats["inserted_count"] = (m["n"] - m["r"]) if m else None
-        stats["_staged_max_ts"] = m["mx"] if m else None
-
-    if obs_target is None or obs_survivors is None:
-        return stats
-    mt = _metrics(obs_target)
-    ms = _metrics(obs_survivors)
+    n_target = _metric_n(obs_target)
+    n_survivors = _metric_n(obs_survivors)
     stats["deleted_count"] = (
-        mt["n"] - ms["n"] if mt is not None and ms is not None else None
+        n_target - n_survivors
+        if n_target is not None and n_survivors is not None
+        else None
     )
     return stats

@@ -295,13 +295,15 @@ class PartitionedParquetTable:
             # Touched buckets + null-key guard from the PRE-dedup staged
             # frame (r14): both are invariant under the latest-per-key
             # window (it keeps ≥1 row per key), so this job is a plain
-            # scan+aggregate of the cached micro-batch — no window
-            # shuffle. The staged/inserted counts and the carried
-            # watermark DO depend on the dedup; they ride the staging
-            # write action as an observation (incremental_merge's
-            # _defer_staged_counts), so the window work runs exactly
-            # once, inside the write. Failing on a NULL key here is
-            # still strictly before anything is written.
+            # scan+aggregate of the micro-batch — no window shuffle. The
+            # staged/inserted counts and the carried watermark DO depend
+            # on the dedup; they come from incremental_merge's staged agg
+            # over the persisted `staged` above (the same plan, so the
+            # window runs once). Not an Observation: inside foreachBatch
+            # the micro-batch belongs to another session than the target
+            # the write runs on, so a listener on `staged` never fires.
+            # Failing on a NULL key here is still strictly before
+            # anything is written.
             row = staged_prefilter(extract, spec, watermark).agg(
                 F.collect_set(
                     key_bucket(self.key_col, self.n_buckets)
@@ -332,12 +334,9 @@ class PartitionedParquetTable:
             # filter on the PARTITION column: directory-pruned read of the
             # touched buckets only (PartitionFilters, asserted in tests)
             pruned = raw.filter(F.col(BUCKET_COL).isin(touched)).select(*cols)
-            if stats is not None:
-                # staged/inserted counts + carried watermark ride the
-                # staging write action (observation on the inserts branch)
-                stats["_defer_staged_counts"] = True
             # watermark override: the pruned slice's max(ts) is NOT the
             # table watermark — pass the global one through.
+            _t = _time.perf_counter()
             merged = incremental_merge(
                 pruned,
                 extract,
@@ -347,6 +346,8 @@ class PartitionedParquetTable:
                 watermark=watermark,
                 stats=stats,
             )
+            # with stats, incremental_merge runs the staged-counts agg job
+            _phase["staged_counts"] = round(_time.perf_counter() - _t, 4)
             # Stage `merged` to a TEMP directory first: it is lazily derived
             # from the very bucket files the commit below deletes/replaces,
             # and relying on the persist() cache surviving until the final
@@ -391,11 +392,6 @@ class PartitionedParquetTable:
                 from .merge import finalize_merge_stats
 
                 finalize_merge_stats(stats)
-                mx = stats.pop("_staged_max_ts", None)
-                stats.setdefault("watermark", watermark)
-                stats["next_watermark"] = (
-                    max(watermark, mx) if mx else watermark
-                )
             _t = _time.perf_counter()
             try:
                 # Every bucket in `merged` is in `touched` (survivors come

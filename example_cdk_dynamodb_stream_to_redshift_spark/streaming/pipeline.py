@@ -330,10 +330,10 @@ class CdcPipeline:
         # report aggregate, the extract write, or a merge's staged scan —
         # all full scans; no consumer of `extract` takes a LIMIT-style
         # action, which would under-count). The old LIMIT-1 isEmpty probe
-        # was the first serialized job of every refresh and paid the whole
-        # batch parse before anything else could start; now the parse cost
-        # lands inside already-needed concurrent actions, and the (rare)
-        # quarantine write runs after the merge pool — replay-safe either
+        # was an extra serialized job on every refresh; now the parse cost
+        # lands inside an already-needed action (the gate's aggregate or
+        # the extract write), and the (rare) quarantine write runs after
+        # the merge pool — replay-safe either
         # way: a replayed batch re-derives the same bad set and overwrites
         # its own batch_id subdirectory.
         from pyspark.sql import Observation
@@ -416,22 +416,17 @@ class CdcPipeline:
             # batch-id-scoped overwrite, NOT append: foreachBatch is
             # at-least-once, and a replayed batch must overwrite its own
             # subdirectory instead of appending duplicate MV rows.
-            # r14: the extract write shares the merge pool below — it
-            # reads only the cached batch and touches a target none of
-            # the merges do, so serializing it in front of them bought
-            # nothing. Failure ordering is unchanged in effect: if any
-            # pool task fails the batch fails, and the replay both
-            # rewrites the extract subdirectory and re-merges
-            # idempotently under the watermark guard.
-            def write_extract() -> None:
-                tw = _time.perf_counter()
-                extract.write.mode("overwrite").parquet(
-                    os.path.join(self.extract_path, f"batch_id={batch_id}")
-                )
-                stages["extract_write_sec"] = round(
-                    _time.perf_counter() - tw, 4
-                )
-
+            # The write runs BEFORE the merge pool: as the batch's first
+            # full scan it alone materializes the cached batch. Sharing
+            # the pool with the merges (r14), every thread that reached
+            # the cache before it was built submitted its own
+            # materialization job under AQE, so the number of Spark jobs
+            # per refresh depended on thread timing.
+            extract.write.mode("overwrite").parquet(
+                os.path.join(self.extract_path, f"batch_id={batch_id}")
+            )
+            stages["extract_write_sec"] = round(_time.perf_counter() - _t0, 4)
+            _t0 = _time.perf_counter()
             # The three entity merges touch disjoint targets and share only
             # the cached extract — run them CONCURRENTLY. Spark schedules
             # jobs from separate driver threads in parallel (FIFO pool),
@@ -488,14 +483,12 @@ class CdcPipeline:
                 )
                 return [(spec.name, stats)] + mv_rows
 
-            with ThreadPoolExecutor(max_workers=len(ALL_SPECS) + 1) as pool:
-                wfut = pool.submit(write_extract)
+            with ThreadPoolExecutor(max_workers=len(ALL_SPECS)) as pool:
                 entity_stats = [
                     row
                     for fut in [pool.submit(run_merge, s) for s in ALL_SPECS]
                     for row in fut.result()
                 ]
-                wfut.result()
             stages["merge_wall_sec"] = round(_time.perf_counter() - _t0, 4)
             _t0 = _time.perf_counter()
             # one log write per BATCH (not per entity): the rows are tiny

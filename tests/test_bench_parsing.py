@@ -74,6 +74,39 @@ def test_prior_comparison_uses_local_record_for_r5_compact_summary():
     assert cmp_["prior_shared_query_sec"] != round(2.2641 + 1.7227, 4)
 
 
+def test_prior_comparison_uses_local_record_for_r14_partial_map():
+    """Since r14 the compact summary carries a partial map of the slowest
+    queries. It must not be taken as the whole prior round: a query in
+    BENCH_LOCAL_r14.json that is not among the summary's slowest is still
+    shared, with its prior timing and build cost taken from LOCAL."""
+    r14_path = os.path.join(_REPO_ROOT, "BENCH_r14.json")
+    with open(r14_path) as fh:
+        parsed = json.load(fh)["parsed"]
+    with open(os.path.join(_REPO_ROOT, "BENCH_LOCAL_r14.json")) as fh:
+        local = json.load(fh)
+    assert "full_record" in parsed and parsed["n_queries_omitted"] > 0
+    name = next(
+        n for n in local["queries"]
+        if n not in parsed["queries"] and n in local["build_sec"]
+    )
+    cmp_ = bench._prior_round_comparison(
+        {name: 1.0}, {name: 1.0}, prior_file=r14_path
+    )
+    assert cmp_ is not None and cmp_["shared_queries"] == 1
+    assert cmp_["prior_shared_query_sec"] == round(local["queries"][name], 4)
+    assert cmp_["prior_shared_end_to_end_sec"] == round(
+        local["queries"][name] + local["build_sec"][name], 4
+    )
+    # the whole LOCAL round is shared, not only the summary's partial map
+    whole = bench._prior_round_comparison(
+        dict(local["queries"]), {}, prior_file=r14_path
+    )
+    assert whole["shared_queries"] == len(local["queries"])
+    assert whole["prior_shared_query_sec"] == round(
+        sum(local["queries"].values()), 4
+    )
+
+
 def test_prior_comparison_prefers_committed_local_record(tmp_path):
     """When BENCH_LOCAL_r{N}.json (the committed full record) exists for
     the prior round, its per-query/build maps are used — tail recovery
@@ -174,15 +207,54 @@ def test_prior_comparison_ignores_local_record_at_other_sf(tmp_path):
     assert cmp_ is None
 
 
+def _assert_summary_line_bounded(out: dict, timings: dict[str, float]):
+    summary = bench._compact_summary(out, timings)
+    line = json.dumps(summary)
+    # bench.py's own stated budget, inside the driver's ~2 KB tail
+    assert len(line.encode()) <= bench.SUMMARY_LINE_BUDGET <= 2048, len(line)
+    assert "build_sec" not in summary
+    assert not any(k.endswith("_stages") for k in summary)
+    for k, v in summary.items():
+        if k == "queries":
+            assert all(
+                isinstance(n, str) and isinstance(t, float) for n, t in v.items()
+            )
+        elif isinstance(v, list):
+            assert all(isinstance(x, (int, float)) for x in v), k
+        else:
+            assert v is None or isinstance(v, (str, int, float)), k
+    kept = summary["queries"]
+    assert kept  # the bounded map still rides the line
+    assert len(kept) + summary["n_queries_omitted"] == len(timings)
+    omitted = [t for n, t in timings.items() if n not in kept]
+    if omitted:
+        assert min(timings[n] for n in kept) >= max(omitted)
+    return summary
+
+
 def test_summary_fields_are_bounded():
-    """Every key the compact summary may emit is a scalar or the 8-key cdc
-    stage map — no unbounded per-query maps can ever reach the last line
-    (the r4 failure mode, structurally)."""
-    src = open(os.path.join(_REPO_ROOT, "bench.py")).read()
-    start = src.index('summary = {')
-    block = src[start : src.index("print(json.dumps(summary))")]
-    assert '"queries"' not in block
-    assert '"build_sec"' not in block
+    """The compact summary (the LAST stdout line) must always fit the
+    driver's ~2 KB tail — the r4 failure mode was an unbounded per-query
+    map pushing the headline out of it. Checked on the emitted line
+    itself: its byte length, its shape (scalars, numeric series, and only
+    the bounded slowest-queries map — no build or stage maps), on a
+    committed full record and on one far larger than any real round."""
+    from example_cdk_dynamodb_stream_to_redshift_spark.plans.inventory import (
+        REGISTRY,
+    )
+
+    with open(os.path.join(_REPO_ROOT, "BENCH_LOCAL_r15.json")) as fh:
+        out = json.load(fh)
+    _assert_summary_line_bounded(out, out["queries"])
+
+    timings = {name: 1.0 + i / 1000 for i, name in enumerate(REGISTRY)}
+    timings.update(
+        {f"synthetic_extra_query_with_a_long_name_{i:04d}": 0.5 + i / 100
+         for i in range(400)}
+    )
+    big = dict(out, queries=timings)
+    summary = _assert_summary_line_bounded(big, timings)
+    assert summary["n_queries_omitted"] > 0
 
 
 def test_headline_names_are_registered():

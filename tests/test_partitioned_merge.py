@@ -183,6 +183,29 @@ def test_scoped_merge_guard_and_watermark(spark, tmp_path, extract):
     assert {r["memberName"] for r in table.read().collect()} == {"name3", "wm"}
 
 
+def test_merge_stats_exact_when_extract_is_from_another_session(
+    spark, tmp_path, extract
+):
+    """Inside foreachBatch the micro-batch belongs to a different session
+    than the target table. The sync-log counts and the carried watermark
+    must still be exact values, not a timeout fallback: an Observation on
+    the batch side never fires on the target-side write action."""
+    other = spark.newSession()
+    ext = build_extract(read_cdc_records(other, str(tmp_path / "batch.json")))
+    table = PartitionedParquetTable(
+        spark, str(tmp_path / "member"), MEMBER_SCHEMA, "memberId", N_BUCKETS
+    )
+    table.overwrite_full(spark.createDataFrame(_seed_rows(), MEMBER_SCHEMA))
+    stats: dict = {}
+    table.merge(ext, MEMBER_SPEC, sync_ts=SYNC, stats=stats)
+    assert stats["staged_count"] == 3  # m3 MODIFY, m7 REMOVE, m99 INSERT
+    assert stats["deleted_count"] == 2  # m3 and m7 are in the seed
+    assert stats["inserted_count"] == 2  # the REMOVE is not re-inserted
+    assert stats["watermark"] == OLD
+    # latest non-REMOVE event: (BASE_MS + 2000) // 1000 in UTC
+    assert stats["next_watermark"] == dt.datetime(2023, 11, 14, 22, 13, 22)
+
+
 def test_parquet_table_keeps_one_prior_version_for_lazy_readers(spark, tmp_path):
     # a DataFrame handed out before a refresh must stay executable for one
     # commit (lazy plans resolve files at action time, not at read() time)

@@ -16,9 +16,12 @@ replays idempotent: the watermark lives in the target table itself, so a
 crashed-and-retried batch re-derives the same staging set.
 
 Spark-first design notes (100 TB posture):
-- The merge is a PURE function target×extract -> new target; storage commit
-  is the caller's concern (storage.ParquetTable does atomic swap; a Delta
-  backend would use MERGE INTO inside foreachBatch).
+- The merge is a PURE function target×extract -> new target
+  (``incremental_merge``). ``merge_into`` is the one orchestration both
+  storage backends run it through: stage once, one stats aggregate, one
+  write (storage.ParquetTable does an atomic swap, the bucketed store a
+  partition-scoped rewrite; a Delta backend would use MERGE INTO inside
+  foreachBatch).
 - The staged micro-batch is small; its key set is BROADCAST to the anti-join
   so the (huge) target is never shuffled — the delete+insert rewrite touches
   each target partition exactly once, map-side.
@@ -34,10 +37,11 @@ Spark-first design notes (100 TB posture):
 from __future__ import annotations
 
 import datetime as dt
+import time
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.dynamo import av_number, av_string, epoch_ms_to_timestamp, strip_prefix
@@ -108,22 +112,19 @@ def read_watermark(target: DataFrame) -> dt.datetime | None:
     return target.agg(F.max("approximateUpdateTimestamp")).first()[0]
 
 
-def staged_prefilter(
-    extract: DataFrame, spec: MergeSpec, watermark: dt.datetime
-) -> DataFrame:
-    """Step 3 alone: this entity's new changes, BEFORE latest-per-key dedup.
-
-    Split out (r14) because properties that are invariant under the dedup —
-    the set of touched key buckets, whether any merge key is NULL, emptiness
-    — can be derived from this frame with a cheap scan+aggregate job, no
-    window shuffle: the dedup keeps at least one row per key, so key-level
-    sets are identical before and after it."""
-    routed = extract.filter(
-        F.col("pk").startswith(spec.pk_prefix)  # pk LIKE '<prefix>%' ESCAPE
-    )
-    return spec.project(routed).filter(
-        F.col("approximateUpdateTimestamp") > F.lit(watermark)
-    )
+def _checked_watermark(
+    watermark: dt.datetime | None, spec: MergeSpec, initial_load_guard: bool = True
+) -> dt.datetime:
+    if watermark is None or watermark == _EPOCH:
+        if initial_load_guard:
+            # RAISE EXCEPTION 'Initial load has not been performed'
+            # (sql/incremental_sync_members.sql:13-15)
+            raise ValueError(
+                f"initial load has not been performed for {spec.name}: "
+                "watermark is NULL/epoch"
+            )
+        return _EPOCH
+    return watermark
 
 
 def stage_changes(
@@ -136,7 +137,12 @@ def stage_changes(
     (sql/incremental_sync_members.sql:38-40); we keep exactly one,
     deterministically.
     """
-    staged = staged_prefilter(extract, spec, watermark)
+    routed = extract.filter(
+        F.col("pk").startswith(spec.pk_prefix)  # pk LIKE '<prefix>%' ESCAPE
+    )
+    staged = spec.project(routed).filter(
+        F.col("approximateUpdateTimestamp") > F.lit(watermark)
+    )
     # sequencenumber is a Kinesis decimal STRING — up to ~56 digits, which
     # overflows every Spark numeric type (decimal maxes at 38 digits: the
     # cast would NULL out / throw under ANSI). Numeric order without ANY
@@ -157,6 +163,69 @@ def stage_changes(
     )
 
 
+def _staged_count_cols() -> list[Column]:
+    """staged / REMOVE counts and the post-merge in-table watermark (MAX ts
+    of the inserted rows), as one aggregate's columns."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(F.col("eventName") == "REMOVE", 1)).alias("r"),
+        F.max(
+            F.when(
+                F.col("eventName") != "REMOVE",
+                F.col("approximateUpdateTimestamp"),
+            )
+        ).alias("mx"),
+    ]
+
+
+def _record_counts(stats: dict, watermark: dt.datetime, row) -> None:
+    stats.update(
+        watermark=watermark,
+        staged_count=row["n"],
+        inserted_count=row["n"] - row["r"],
+        # lets a long-lived caller carry the watermark forward and skip
+        # the next refresh's MAX(ts) table scan (see CdcPipeline)
+        next_watermark=max(watermark, row["mx"]) if row["mx"] else watermark,
+    )
+
+
+def _merged(
+    target: DataFrame,
+    staged: DataFrame,
+    spec: MergeSpec,
+    sync_ts: dt.datetime | None,
+    stats: dict | None,
+) -> DataFrame:
+    """Steps 5+6 as a plan: target rows whose key is not staged, plus the
+    staged non-REMOVE rows stamped with syncTimestamp. With ``stats``, the
+    target and survivor row counts are observed during the caller's write
+    (``finalize_merge_stats`` turns them into ``deleted_count``)."""
+    if stats is not None:
+        # deleted = |target slice| - |survivors|, both observed for free
+        # during the caller's write action (neither node is in the
+        # broadcast-keys branch, so each executes exactly once per action)
+        obs_target, obs_survivors = Observation(), Observation()
+        target = target.observe(obs_target, F.count(F.lit(1)).alias("n"))
+        stats.update(_obs_target=obs_target, _obs_survivors=obs_survivors)
+    # Micro-batches are small: broadcast the staged keys so the big target is
+    # anti-joined map-side, no target shuffle.
+    staged_keys = F.broadcast(staged.select(spec.key_col))
+    survivors = target.join(staged_keys, spec.key_col, "left_anti")
+    if stats is not None:
+        survivors = survivors.observe(
+            stats["_obs_survivors"], F.count(F.lit(1)).alias("n")
+        )
+    inserts = (
+        staged.filter(F.col("eventName") != F.lit("REMOVE"))
+        .withColumn(
+            "syncTimestamp",
+            F.lit(sync_ts).cast("timestamp") if sync_ts else F.current_timestamp(),
+        )
+        .select(*[f.name for f in target.schema.fields])
+    )
+    return survivors.unionByName(inserts)
+
+
 def incremental_merge(
     target: DataFrame,
     extract: DataFrame,
@@ -171,9 +240,8 @@ def incremental_merge(
     update = delete + insert (ST4); REMOVE rows delete and are not
     re-inserted (ST5); syncTimestamp is stamped once per batch (F7).
 
-    ``watermark`` overrides the MAX(ts) read — used by the partition-scoped
-    path, where ``target`` is a pruned slice but the watermark must stay the
-    GLOBAL table maximum.
+    ``watermark`` overrides the MAX(ts) read — used when ``target`` is a
+    pruned slice but the watermark must stay the GLOBAL table maximum.
 
     ``stats``, when a dict is passed, is filled with the per-statement
     diagnostics the reference's procedures RAISE INFO and surface via
@@ -183,83 +251,117 @@ def incremental_merge(
     ``inserted_count``. Cost model mirrors Redshift, where these counts are
     free statement side effects: staged/inserted come from ONE small agg
     job over the micro-batch-sized staged set, and deleted_count rides the
-    merge's own write action via ``df.observe`` (target-scan count minus
-    survivor count, collected by Spark's Observation listener during the
-    action — zero extra jobs, zero extra target scans). Because the
-    observed metrics only exist after the caller executes an action on the
-    returned DataFrame, ``deleted_count`` is materialized by calling
-    ``finalize_merge_stats(stats)`` AFTER that action; until then the dict
-    holds the pending observations.
+    caller's write action via ``df.observe`` (target-scan count minus
+    survivor count — zero extra jobs, zero extra target scans), resolved by
+    ``finalize_merge_stats(stats)`` AFTER that action.
+
+    Nothing here is cached, so the agg job and the write each run the
+    latest-per-key window, and the write runs it twice more (broadcast
+    keys, inserts). This is the equivalence reference; the storage
+    backends merge through ``merge_into``, which stages once.
     """
     if watermark is None:
         watermark = read_watermark(target)
-    if watermark is None or watermark == _EPOCH:
-        if initial_load_guard:
-            # RAISE EXCEPTION 'Initial load has not been performed'
-            # (sql/incremental_sync_members.sql:13-15)
-            raise ValueError(
-                f"initial load has not been performed for {spec.name}: "
-                "watermark is NULL/epoch"
-            )
-        watermark = _EPOCH
-
+    watermark = _checked_watermark(watermark, spec, initial_load_guard)
     staged = stage_changes(extract, spec, watermark)
-
     if stats is not None:
-        from pyspark.sql import Observation
+        _record_counts(stats, watermark, staged.agg(*_staged_count_cols()).first())
+    return _merged(target, staged, spec, sync_ts, stats)
 
-        # one combined agg job over the micro-batch-sized staged set (on
-        # the partitioned backend it reads the plan merge() persisted)
-        counts = staged.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(F.col("eventName") == "REMOVE", 1)).alias("r"),
-            # post-merge in-table watermark (MAX ts of inserted rows)
-            # as a rider column — lets a long-lived caller carry the
-            # watermark forward and skip the next refresh's MAX(ts)
-            # table scan (see PartitionedParquetTable.merge)
-            F.max(
-                F.when(
-                    F.col("eventName") != "REMOVE",
-                    F.col("approximateUpdateTimestamp"),
-                )
-            ).alias("mx"),
-        ).first()
-        stats.update(
-            staged_count=counts["n"],
-            inserted_count=counts["n"] - counts["r"],
-            next_watermark=(
-                max(watermark, counts["mx"]) if counts["mx"] else watermark
-            ),
-        )
-        # deleted = |target slice| - |survivors|, both observed for free
-        # during the caller's write action (neither node is in the
-        # broadcast-keys branch, so each executes exactly once per action)
-        obs_target, obs_survivors = Observation(), Observation()
-        target = target.observe(obs_target, F.count(F.lit(1)).alias("n"))
-        stats.update(
-            watermark=watermark,
-            _obs_target=obs_target,
-            _obs_survivors=obs_survivors,
-        )
 
-    # Micro-batches are small: broadcast the staged keys so the big target is
-    # anti-joined map-side, no target shuffle.
-    staged_keys = F.broadcast(staged.select(spec.key_col))
-    survivors = target.join(staged_keys, spec.key_col, "left_anti")
+def merge_into(
+    table,
+    extract: DataFrame,
+    spec: MergeSpec,
+    sync_ts: dt.datetime | None = None,
+    stats: dict | None = None,
+    watermark: dt.datetime | None = None,
+    bucket: Column | None = None,
+) -> list[int] | None:
+    """The CDC merge of one entity into a storage backend, with the same
+    semantics as ``incremental_merge`` over the whole table:
+
+    1. stage the batch (``stage_changes``) and persist it, so the
+       latest-per-key window runs once;
+    2. ONE aggregate over it gives the staged/inserted counts and the
+       carried watermark and, for a bucketed table (``bucket`` is its
+       bucket expression over the key), the touched buckets and the
+       NULL-key guard — both invariant under the dedup, which keeps at
+       least one row per key;
+    3. build the merged plan against ``table.merge_slice(buckets)``;
+    4. ``table.commit_merge(merged, buckets)`` writes it — the one write.
+
+    ``table.merge_slice(None)`` must return the whole target (the
+    watermark read when ``watermark`` is not carried in). Returns the
+    sorted touched bucket ids (``[]`` when nothing is staged), or None for
+    an unbucketed table. When nothing is staged, nothing is written.
+    ``stats`` as in ``incremental_merge``, exact after return, plus the
+    per-phase wall clock under ``merge_phase_sec``.
+    """
+    phase: dict[str, float] = {}
+    t = time.perf_counter()
+    if watermark is None:
+        watermark = read_watermark(table.merge_slice(None))
+    phase["watermark_read"] = round(time.perf_counter() - t, 4)
+    watermark = _checked_watermark(watermark, spec)
     if stats is not None:
-        survivors = survivors.observe(
-            stats["_obs_survivors"], F.count(F.lit(1)).alias("n")
-        )
+        stats["merge_phase_sec"] = phase
 
-    inserts = (
-        staged.filter(F.col("eventName") != F.lit("REMOVE"))
-        .withColumn(
-            "syncTimestamp",
-            F.lit(sync_ts).cast("timestamp") if sync_ts else F.current_timestamp(),
-        )
-        .select(*[f.name for f in target.schema.fields])
-    )
-    return survivors.unionByName(inserts)
+    staged = stage_changes(extract, spec, watermark).persist()
+    try:
+        t = time.perf_counter()
+        cols = _staged_count_cols()
+        if bucket is not None:
+            cols += [
+                F.collect_set(bucket).alias("bk"),
+                # NULL merge keys hash to the seed bucket and would
+                # silently collapse under one phantom key — fail instead,
+                # strictly before anything is written
+                F.count(F.when(F.col(spec.key_col).isNull(), 1)).alias("nullk"),
+            ]
+        row = staged.agg(*cols).first()
+        phase["staged_agg"] = round(time.perf_counter() - t, 4)
+        if bucket is not None and row["nullk"]:
+            raise ValueError(
+                f"{row['nullk']} staged row(s) have NULL merge key "
+                f"{spec.key_col!r}: merge keys must be non-null"
+            )
+        if stats is not None:
+            _record_counts(stats, watermark, row)
+        buckets = sorted(int(b) for b in row["bk"]) if bucket is not None else None
+        if not row["n"]:
+            if stats is not None:
+                stats["deleted_count"] = 0
+            return buckets
+        merged = _merged(table.merge_slice(buckets), staged, spec, sync_ts, stats)
+        t = time.perf_counter()
+        table.commit_merge(merged, buckets)
+        phase["write"] = round(time.perf_counter() - t, 4)
+        if stats is not None:
+            finalize_merge_stats(stats)  # counts observed by the write
+        return buckets
+    finally:
+        staged.unpersist()
+
+
+def await_observation(obs, deadline: float) -> dict | None:
+    """The metrics of ``obs`` once the action it is attached to has run,
+    or None if they are not there by ``deadline`` (a ``time.monotonic``
+    value) or ``obs`` was never attached via ``.observe``.
+
+    ``Observation.get`` blocks forever if that action never runs (a failed
+    or skipped write), which would hang the foreachBatch thread. So this
+    probes the JVM-side ``getRowOrEmpty``, which returns at once, every
+    20 ms up to the deadline."""
+    jo = getattr(obs, "_jo", None)
+    if jo is None:
+        return None
+    while True:
+        if jo.getRowOrEmpty().isDefined():
+            return obs.get  # metrics present: this cannot block
+        if time.monotonic() >= deadline:
+            return None
+        time.sleep(0.02)
 
 
 def finalize_merge_stats(stats: dict, timeout_s: float = 60.0) -> dict:
@@ -268,37 +370,21 @@ def finalize_merge_stats(stats: dict, timeout_s: float = 60.0) -> dict:
     action on the merged DataFrame (the observation listener fires with
     that action).
 
-    The wait is BOUNDED: ``Observation.get`` blocks forever if the action
-    never ran (write failed/skipped, or a refactor dropped it), which would
-    hang the foreachBatch merge thread. We poll the JVM-side
-    ``getRowOrEmpty`` (itself a ~100 ms bounded wait) up to ``timeout_s``;
-    on timeout the ``_obs_*`` handles are dropped (they hold unpicklable
-    JVM refs) and ``deleted_count`` is set to None so callers log a gap
+    The wait is bounded by ``timeout_s`` (``await_observation``); on
+    timeout the ``_obs_*`` handles are dropped (they hold unpicklable JVM
+    refs) and ``deleted_count`` is set to None so callers log a gap
     instead of deadlocking."""
-    import time
-
     obs_target = stats.pop("_obs_target", None)
     obs_survivors = stats.pop("_obs_survivors", None)
     if obs_target is None or obs_survivors is None:
         return stats
 
     deadline = time.monotonic() + timeout_s
-
-    def _metric_n(obs) -> int | None:
-        jo = getattr(obs, "_jo", None)
-        if jo is None:  # never attached via .observe — no action can fire it
-            return None
-        while True:
-            if jo.getRowOrEmpty().isDefined():
-                return obs.get["n"]  # metrics present: this cannot block
-            if time.monotonic() >= deadline:
-                return None
-
-    n_target = _metric_n(obs_target)
-    n_survivors = _metric_n(obs_survivors)
+    m_target = await_observation(obs_target, deadline)
+    m_survivors = await_observation(obs_survivors, deadline)
     stats["deleted_count"] = (
-        n_target - n_survivors
-        if n_target is not None and n_survivors is not None
+        m_target["n"] - m_survivors["n"]
+        if m_target is not None and m_survivors is not None
         else None
     )
     return stats

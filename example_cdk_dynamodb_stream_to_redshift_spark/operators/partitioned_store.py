@@ -9,11 +9,12 @@ the merge key and rewrite ONLY the buckets containing staged keys:
 
 - layout: ``root/_kb=<pmod(xxhash64(key), N)>/part-*.parquet`` — a stable
   directory per key bucket (Hive-style partitioning, partition-pruned reads);
-- merge: stage the micro-batch (operators.merge.stage_changes — unchanged),
-  collect its distinct bucket ids (≤ N tiny ints), prune the target scan to
-  those buckets, run the same anti-join+union merge on that slice, and
-  commit with **dynamic partition overwrite** so untouched buckets' files
-  are never opened, let alone rewritten.
+- merge: the shared orchestration (operators.merge.merge_into) stages the
+  micro-batch once and collects its distinct bucket ids (≤ N tiny ints) in
+  its one stats aggregate; this store prunes the target scan to those
+  buckets, and the same anti-join+union merge on that slice is committed
+  bucket by bucket, so untouched buckets' files are never opened, let
+  alone rewritten.
 
 Cost per micro-batch: read+write of touched buckets only ≈
 |batch keys| / N of the table (vs 100% for the full rewrite). N trades
@@ -37,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .merge import MergeSpec, incremental_merge
+from .merge import MergeSpec, merge_into
 
 BUCKET_COL = "_kb"
 
@@ -231,23 +232,32 @@ class PartitionedParquetTable:
             os.remove(manifest)
         shutil.rmtree(self._staging_dir(), ignore_errors=True)
 
+    def merge_slice(self, buckets: list[int] | None) -> DataFrame:
+        """The target rows a merge rewrites: the given buckets through a
+        directory-pruned read (filter on the PARTITION column, so
+        PartitionFilters — asserted in tests), or the whole table."""
+        if buckets is None:
+            return self.read()
+        cols = [f.name for f in self.schema.fields]
+        return (
+            self._read_raw().filter(F.col(BUCKET_COL).isin(buckets)).select(*cols)
+        )
+
     def merge(
         self,
         extract: DataFrame,
         spec: MergeSpec,
         sync_ts: dt.datetime | None = None,
-        initial_load_guard: bool = True,
         stats: dict | None = None,
         watermark: dt.datetime | None = None,
     ) -> list[int]:
         """Partition-scoped CDC merge; returns the touched bucket ids.
 
         The watermark/staging/dedup/anti-join logic is the SAME
-        `incremental_merge` as the full-rewrite path — only the target slice
-        it runs against and the commit scope differ. ``stats`` (optional
-        dict) receives the same merge diagnostics as ``incremental_merge``;
-        here the deleted-count semi-join runs against the bucket-pruned
-        slice only.
+        ``merge_into`` as the full-rewrite path — only the target slice it
+        runs against and the commit scope differ. ``stats`` (optional dict)
+        receives the same merge diagnostics; here the deleted count runs
+        against the bucket-pruned slice only.
 
         ``watermark``, when given, skips the per-refresh MAX(ts) scan of
         the WHOLE target (the one un-pruned read this path had left): a
@@ -257,200 +267,106 @@ class PartitionedParquetTable:
         into O(1) driver state, with identical replay semantics (restart
         falls back to the in-table watermark, ST2).
         """
-        from .merge import _EPOCH, read_watermark, stage_changes
-
         # complete any torn directory commit from a crashed predecessor
         # BEFORE reading the target — the read must see the rolled-forward
         # state, not a half-committed tear
         self._roll_forward()
-        raw = self._read_raw()
-        cols = [f.name for f in self.schema.fields]
-        # per-phase wall clock, recorded into stats["merge_phase_sec"] so a
-        # drift in one entity's merge time decomposes (watermark read /
-        # staged agg / staging write / directory commit)
-        import time as _time
+        return merge_into(
+            self,
+            extract,
+            spec,
+            sync_ts,
+            stats=stats,
+            watermark=watermark,
+            bucket=key_bucket(self.key_col, self.n_buckets),
+        )
 
-        _phase: dict[str, float] = {}
-        _t = _time.perf_counter()
-        if watermark is None:
-            watermark = read_watermark(raw)
-        _phase["watermark_read"] = round(_time.perf_counter() - _t, 4)
-        if watermark is None or watermark == _EPOCH:
-            if initial_load_guard:
-                # same ST8 behavior as the full-rewrite path
-                raise ValueError(
-                    f"initial load has not been performed for {spec.name}: "
-                    "watermark is NULL/epoch"
-                )
-            watermark = _EPOCH
+    def commit_merge(self, merged: DataFrame, touched: list[int]) -> None:
+        """Replace the ``touched`` buckets with ``merged`` (which holds rows
+        of those buckets only: survivors come from touched buckets, inserts'
+        keys are staged keys).
 
-        from .merge import staged_prefilter
-
-        staged = stage_changes(extract, spec, watermark)
-        staged.persist()
-        if stats is not None:
-            stats["merge_phase_sec"] = _phase
+        ``merged`` is staged to a TEMP directory first: it is lazily derived
+        from the very bucket files the commit below deletes/replaces, and
+        relying on a cache surviving until a final write is not safe on a
+        real cluster (eviction / executor loss would recompute from deleted
+        files). The temp write fully materializes the result while every
+        source file is intact — ALREADY LAID OUT per bucket, so the commit
+        is pure metadata: surviving buckets come from the staging directory
+        listing (no distinct job) and each directory moves into place (no
+        second Spark write)."""
+        staging = self._staging_dir()
+        shutil.rmtree(staging, ignore_errors=True)
+        # Repartition BY BUCKET before the partitioned write (r13):
+        # without it every upstream task (shuffle-width many) holds a mix
+        # of buckets, so the dynamic-partition writer sorts each task and
+        # opens a file per (task x bucket) — up to width x |touched| tiny
+        # files per merge, whose open/commit overhead dominated the
+        # refresh heartbeat (staging_write 2.0s -> 0.47s measured on the
+        # 2k-event bench; ~16 files instead of ~128 also cuts later scan
+        # and compaction cost). At scale the trade is explicit: write
+        # parallelism becomes one task per touched bucket, and n_buckets
+        # is picked so a bucket is a few GB (module docstring) — set
+        # spark.sql.files.maxRecordsPerFile if single-bucket files must
+        # stay smaller.
+        (
+            merged.withColumn(BUCKET_COL, key_bucket(self.key_col, self.n_buckets))
+            .repartition(self.n_buckets, F.col(BUCKET_COL))
+            .write.mode("overwrite")
+            .partitionBy(BUCKET_COL)
+            .parquet(staging)
+        )
         try:
-            _t = _time.perf_counter()
-            # Touched buckets + null-key guard from the PRE-dedup staged
-            # frame (r14): both are invariant under the latest-per-key
-            # window (it keeps ≥1 row per key), so this job is a plain
-            # scan+aggregate of the micro-batch — no window shuffle. The
-            # staged/inserted counts and the carried watermark DO depend
-            # on the dedup; they come from incremental_merge's staged agg
-            # over the persisted `staged` above (the same plan, so the
-            # window runs once). Not an Observation: inside foreachBatch
-            # the micro-batch belongs to another session than the target
-            # the write runs on, so a listener on `staged` never fires.
-            # Failing on a NULL key here is still strictly before
-            # anything is written.
-            row = staged_prefilter(extract, spec, watermark).agg(
-                F.collect_set(
-                    key_bucket(self.key_col, self.n_buckets)
-                ).alias("bk"),
-                # NULL merge keys hash to the seed bucket and would
-                # silently collapse under one phantom key — fail instead
-                F.count(
-                    F.when(F.col(self.key_col).isNull(), 1)
-                ).alias("nullk"),
-            ).first()
-            if row["nullk"]:
+            # A touched bucket ABSENT from staging lost all its rows: its
+            # directory is removed, not replaced. A crash mid-commit leaves
+            # the watermark unmoved and rolls FORWARD on the next merge:
+            # the manifest below (written only after the staging write
+            # fully succeeded) lets _roll_forward re-run the idempotent
+            # move loop, so no bucket's non-staged rows are ever lost to a
+            # tear; the replayed batch then re-applies idempotently
+            # (REMOVE of an absent row is a no-op; re-inserts rewrite the
+            # same values). If an emptied bucket held the global max event
+            # time the watermark can move BACKWARD — harmless here because
+            # the merge input is only this micro-batch.
+            staged_dirs = [
+                d.split("=", 1)[1]
+                for d in os.listdir(staging)
+                if d.startswith(f"{BUCKET_COL}=")
+            ]
+            bad = [v for v in staged_dirs if not v.isdigit()]
+            if bad:
+                # defense in depth: NULL keys are rejected at stage time,
+                # so a non-integer partition value here (e.g.
+                # __HIVE_DEFAULT_PARTITION__) means something unexpected
+                # staged — fail BEFORE any live directory is touched
+                # (nothing is torn: no manifest yet, so staging is
+                # discarded and the batch errors cleanly)
                 raise ValueError(
-                    f"{row['nullk']} staged row(s) have NULL merge key "
-                    f"{self.key_col!r}: merge keys must be non-null"
+                    f"merge staged non-integer {BUCKET_COL} partition(s) "
+                    f"{bad} — refusing to commit"
                 )
-            touched = sorted(int(b) for b in row["bk"])
-            _phase["staged_agg"] = round(_time.perf_counter() - _t, 4)
-            if not touched:
-                if stats is not None:
-                    stats.update(
-                        watermark=watermark,
-                        next_watermark=watermark,
-                        staged_count=0,
-                        deleted_count=0,
-                        inserted_count=0,
-                    )
-                return []
-            # filter on the PARTITION column: directory-pruned read of the
-            # touched buckets only (PartitionFilters, asserted in tests)
-            pruned = raw.filter(F.col(BUCKET_COL).isin(touched)).select(*cols)
-            # watermark override: the pruned slice's max(ts) is NOT the
-            # table watermark — pass the global one through.
-            _t = _time.perf_counter()
-            merged = incremental_merge(
-                pruned,
-                extract,
-                spec,
-                sync_ts,
-                initial_load_guard=False,
-                watermark=watermark,
-                stats=stats,
-            )
-            # with stats, incremental_merge runs the staged-counts agg job
-            _phase["staged_counts"] = round(_time.perf_counter() - _t, 4)
-            # Stage `merged` to a TEMP directory first: it is lazily derived
-            # from the very bucket files the commit below deletes/replaces,
-            # and relying on the persist() cache surviving until the final
-            # write is not safe on a real cluster (eviction / executor loss
-            # would recompute from deleted files). The temp write fully
-            # materializes the result while every source file is intact —
-            # ALREADY LAID OUT per bucket (partitionBy), so the commit
-            # below is pure metadata: surviving buckets come from the
-            # staging directory listing (no distinct job) and each
-            # directory moves into place (no second Spark write). The
-            # merge is exactly ONE distributed action; on the bench
-            # heartbeat this halved the straggler entity's merge wall.
-            staging = self._staging_dir()
-            shutil.rmtree(staging, ignore_errors=True)
-            _t = _time.perf_counter()
-            # Repartition BY BUCKET before the partitioned write (r13):
-            # without it every upstream task (shuffle-width many) holds a
-            # mix of buckets, so the dynamic-partition writer sorts each
-            # task and opens a file per (task x bucket) — up to
-            # width x |touched| tiny files per merge, whose open/commit
-            # overhead dominated the refresh heartbeat (staging_write
-            # 2.0s -> 0.47s measured on the 2k-event bench; ~16 files
-            # instead of ~128 also cuts later scan and compaction cost).
-            # At scale the trade is explicit: write parallelism becomes
-            # one task per touched bucket, and n_buckets is picked so a
-            # bucket is a few GB (module docstring) — set
-            # spark.sql.files.maxRecordsPerFile if single-bucket files
-            # must stay smaller.
-            (
-                merged.withColumn(
-                    BUCKET_COL, key_bucket(self.key_col, self.n_buckets)
+            still_present = {int(v) for v in staged_dirs}
+            # tmp + os.replace (the sketch-store pointer idiom): the
+            # manifest is crash-RECOVERY state, so its own write must be
+            # atomic — a torn half-written manifest would make the next
+            # merge's _roll_forward die on JSONDecodeError and block every
+            # merge until hand-repair. With the atomic rename a manifest is
+            # visible iff it is complete.
+            tmp = self._commit_manifest() + ".tmp"
+            with open(tmp, "w") as fh:
+                json.dump(
+                    {"touched": list(touched), "staged": sorted(still_present)},
+                    fh,
                 )
-                .repartition(self.n_buckets, F.col(BUCKET_COL))
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(staging)
-            )
-            _phase["staging_write"] = round(_time.perf_counter() - _t, 4)
-            if stats is not None:
-                # the staging write above is the action the merge's pending
-                # count observations ride on — resolve them now
-                from .merge import finalize_merge_stats
-
-                finalize_merge_stats(stats)
-            _t = _time.perf_counter()
-            try:
-                # Every bucket in `merged` is in `touched` (survivors come
-                # from touched buckets, inserts' keys are staged keys). A
-                # touched bucket ABSENT from staging lost all its rows:
-                # its directory is removed, not replaced. A crash
-                # mid-commit leaves the watermark unmoved and rolls
-                # FORWARD on the next merge: the manifest below (written
-                # only after the staging write fully succeeded) lets
-                # _roll_forward re-run the idempotent move loop, so no
-                # bucket's non-staged rows are ever lost to a tear; the
-                # replayed batch then re-applies idempotently (REMOVE of
-                # an absent row is a no-op; re-inserts rewrite the same
-                # values). If an emptied bucket held the global max event
-                # time the watermark can move BACKWARD — harmless here
-                # because the merge input is only this micro-batch.
-                staged_dirs = [
-                    d.split("=", 1)[1]
-                    for d in os.listdir(staging)
-                    if d.startswith(f"{BUCKET_COL}=")
-                ]
-                bad = [v for v in staged_dirs if not v.isdigit()]
-                if bad:
-                    # defense in depth: NULL keys are rejected at stage
-                    # time above, so a non-integer partition value here
-                    # (e.g. __HIVE_DEFAULT_PARTITION__) means something
-                    # unexpected staged — fail BEFORE any live directory
-                    # is touched (nothing is torn: no manifest yet, so
-                    # staging is discarded and the batch errors cleanly)
-                    raise ValueError(
-                        f"merge staged non-integer {BUCKET_COL} partition(s) "
-                        f"{bad} — refusing to commit"
-                    )
-                still_present = {int(v) for v in staged_dirs}
-                # tmp + os.replace (the sketch-store pointer idiom): the
-                # manifest is crash-RECOVERY state, so its own write must
-                # be atomic — a torn half-written manifest would make the
-                # next merge's _roll_forward die on JSONDecodeError and
-                # block every merge until hand-repair. With the atomic
-                # rename a manifest is visible iff it is complete.
-                tmp = self._commit_manifest() + ".tmp"
-                with open(tmp, "w") as fh:
-                    json.dump(
-                        {"touched": list(touched), "staged": sorted(still_present)},
-                        fh,
-                    )
-                    fh.flush()
-                    os.fsync(fh.fileno())
-                os.replace(tmp, self._commit_manifest())
-                self._commit_moves(touched, still_present)
-                os.remove(self._commit_manifest())
-            finally:
-                # a live manifest means the move loop died mid-flight:
-                # KEEP staging so the next merge rolls the commit forward
-                # (deleting it here would recreate the data-loss tear the
-                # manifest exists to prevent)
-                if not os.path.exists(self._commit_manifest()):
-                    shutil.rmtree(staging, ignore_errors=True)
-                _phase["commit_move"] = round(_time.perf_counter() - _t, 4)
+                fh.flush()
+                os.fsync(fh.fileno())
+            os.replace(tmp, self._commit_manifest())
+            self._commit_moves(touched, still_present)
+            os.remove(self._commit_manifest())
         finally:
-            staged.unpersist()
-        return touched
+            # a live manifest means the move loop died mid-flight: KEEP
+            # staging so the next merge rolls the commit forward (deleting
+            # it here would recreate the data-loss tear the manifest exists
+            # to prevent)
+            if not os.path.exists(self._commit_manifest()):
+                shutil.rmtree(staging, ignore_errors=True)

@@ -10,12 +10,15 @@ this class 1:1 (MERGE INTO in foreachBatch) without touching merge logic.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from .merge import MergeSpec, merge_into
 
 
 class ParquetTable:
@@ -91,6 +94,32 @@ class ParquetTable:
     def append(self, df: DataFrame) -> None:
         current = self.read()
         self.overwrite(current.unionByName(df))
+
+    def merge(
+        self,
+        extract: DataFrame,
+        spec: MergeSpec,
+        sync_ts: dt.datetime | None = None,
+        stats: dict | None = None,
+        watermark: dt.datetime | None = None,
+    ) -> None:
+        """Full-rewrite CDC merge: ``operators.merge.merge_into`` over the
+        whole table, committed as one new version (none when nothing is
+        staged). Arguments as ``PartitionedParquetTable.merge``."""
+        merge_into(
+            self,
+            extract,
+            spec,
+            sync_ts,
+            stats=stats,
+            watermark=watermark,
+        )
+
+    def merge_slice(self, buckets: None) -> DataFrame:
+        return self.read()
+
+    def commit_merge(self, merged: DataFrame, buckets: None) -> None:
+        self.overwrite(merged)
 
     def compact(self, n_files: int) -> None:
         """Rewrite the current version into exactly ``n_files`` files —

@@ -7,8 +7,11 @@ column, and keep the transport metadata.
 
 Spark-first shape: ONE ``from_json`` against the typed envelope schema
 replaces Redshift's six ``json_extract_path_text`` calls + ``json_parse``.
-Catalyst prunes unused struct fields from the parse, so downstream plans that
-touch only ``pk``/``eventName`` don't pay for the full envelope.
+It stays one parse per row: left alone, Catalyst's ``OptimizeCsvJsonExprs``
+rewrites every field access on the parsed struct into its own single-field
+``from_json``, so the payload would be parsed once per extracted field (7
+times). The rule leaves a ``from_json`` that carries options alone, which is
+why ``build_extract`` passes the default mode explicitly.
 
 Physical layout parity:
 - DISTKEY(5) (hash-distribute on eventID)   -> optional repartition(eventID)
@@ -85,7 +88,9 @@ def build_extract(records: DataFrame, raw_col: str | None = None) -> DataFrame:
     carry the column through a cache.
     """
     decoded = F.decode(F.col("kinesis_data"), "UTF-8")  # from_varbyte(...,'utf-8')
-    env = F.from_json(decoded, ENVELOPE_SCHEMA)  # json_parse + extracts, in one
+    # json_parse + extracts, in one. The explicit (default) options keep
+    # OptimizeCsvJsonExprs from splitting this into one parse per field.
+    env = F.from_json(decoded, ENVELOPE_SCHEMA, {"mode": "PERMISSIVE"})
     is_envelope = env["eventID"].isNotNull()
 
     def scalar(field: F.Column, name: str) -> F.Column:

@@ -21,12 +21,11 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.merge import _EPOCH as _MERGE_EPOCH
-from ..operators.merge import ALL_SPECS, incremental_merge
+from ..operators.merge import ALL_SPECS, await_observation
 from ..operators.storage import ParquetTable
 from ..plans.extract import build_extract
 from ..schemas import KINESIS_RECORD_SCHEMA, TARGET_SCHEMAS
@@ -47,7 +46,6 @@ class CdcPipeline:
         warehouse: str,
         partitioned: bool = False,
         n_buckets: int = 16,
-        merge_shuffle_partitions: int | None = 8,
         extract_checks: list | None = None,
         contract_mode: str = "quarantine",
         extract_profile_specs: list | None = None,
@@ -56,15 +54,6 @@ class CdcPipeline:
         (operators/partitioned_store.py): merges rewrite only the hash
         buckets containing staged keys — the 100 TB backend. Semantics are
         identical (tests/test_partitioned_merge.py).
-
-        ``merge_shuffle_partitions`` scopes the shuffle width of the
-        foreachBatch merge to the micro-batch, not the session default: the
-        merge's input is one bounded micro-batch, so session-wide (= full-
-        table-sized) shuffle width is pure scheduling overhead — measured
-        2.3x on the 2k-event refresh heartbeat. Size it to batch volume on
-        a real deployment (rows-per-trigger / target-partition-rows), or
-        pass None to keep the session setting; AQE still coalesces below
-        whatever cap is active.
 
         ``extract_checks``: optional expectation suite
         (operators/expectations.py Check list) enforced on the parsed
@@ -93,7 +82,7 @@ class CdcPipeline:
         self.input_path = input_path
         self.warehouse = warehouse
         # per-stage wall clock of the most recent micro-batch (see
-        # _merge_batch_inner); empty until a refresh has processed a batch
+        # _merge_batch); empty until a refresh has processed a batch
         self.last_batch_stages: dict[str, float] = {}
         # entity name -> [(view name, IncrementalAggTable, delta cols)]
         self.maintained_views: dict[str, list] = {}
@@ -112,7 +101,6 @@ class CdcPipeline:
         # re-admits data older than anything it has already applied, and
         # the restart path only re-applies idempotent upserts.
         self._watermarks: dict[str, dt.datetime] = {}
-        self.merge_shuffle_partitions = merge_shuffle_partitions
         self.checkpoint = os.path.join(warehouse, "_checkpoint")
         self.extract_path = os.path.join(warehouse, "member_quest_data_extract")
         self.quarantine_path = os.path.join(warehouse, "_quarantine")
@@ -240,28 +228,6 @@ class CdcPipeline:
             )
         return out
 
-    @contextmanager
-    def _batch_sized_shuffle(self):
-        """Temporarily cap shuffle width to the micro-batch-appropriate
-        setting (see __init__); restored even on merge failure.
-
-        Scope caveat: ``spark.sql.shuffle.partitions`` is session-global, so
-        the cap applies to ANY query planned on this session while a merge
-        is in flight, and two pipelines interleaving on one session could
-        restore each other's value. Run CDC pipelines on a dedicated
-        session (the deployment shape anyway), or pass
-        ``merge_shuffle_partitions=None`` to opt out."""
-        if self.merge_shuffle_partitions is None:
-            yield
-            return
-        key = "spark.sql.shuffle.partitions"
-        prev = self.spark.conf.get(key)
-        self.spark.conf.set(key, str(self.merge_shuffle_partitions))
-        try:
-            yield
-        finally:
-            self.spark.conf.set(key, prev)
-
     # -- batch bootstrap (initial load) -----------------------------------
     def initial_load(
         self,
@@ -287,9 +253,8 @@ class CdcPipeline:
         )
         dump.persist()
         try:
-            with self._batch_sized_shuffle():
-                for name, df in initial_load_all(dump, sync_ts).items():
-                    self.targets[name].append(df)
+            for name, df in initial_load_all(dump, sync_ts).items():
+                self.targets[name].append(df)
         finally:
             dump.unpersist()
         # a re-bootstrap rewrites the targets: any carried watermark is
@@ -298,14 +263,19 @@ class CdcPipeline:
 
     # -- streaming refresh ------------------------------------------------
     def _merge_batch(self, records: DataFrame, batch_id: int) -> None:
-        with self._batch_sized_shuffle():
-            self._merge_batch_inner(records, batch_id)
-
-    def _merge_batch_inner(self, records: DataFrame, batch_id: int) -> None:
         import time as _time
 
         from pyspark.sql import functions as F
 
+        # Each entity merge persists its staged batch (merge_into). With
+        # the default `false`, a cached plan keeps the shuffle width it was
+        # planned with, so AQE cannot coalesce the dedup window's exchange
+        # and every later write of the cache opens that many files. The
+        # micro-batch runs on the stream's own session, where `staged` is
+        # planned and persisted: the caller's session is untouched.
+        records.sparkSession.conf.set(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         # Per-stage wall clock for the LAST processed batch, so a drift in
         # the refresh heartbeat decomposes instead of being one opaque
         # number (bench reports these as cdc_refresh_stages). Dict
@@ -320,10 +290,12 @@ class CdcPipeline:
         # SQL would surface NULLs into the MV and silently drop the row at
         # the pk-prefix filter; we keep the same target semantics but land
         # the RAW payload in a batch-scoped quarantine so bad producers are
-        # debuggable instead of invisible. The batch is parsed ONCE: the
-        # tagged extract (valid + invalid rows, plus the decoded payload)
-        # is cached, and the quarantine decision, the extract write and the
-        # 3 merges all read that cache — no second from_json pass.
+        # debuggable instead of invisible. The batch is parsed ONCE: each
+        # row's payload goes through one from_json (build_extract keeps
+        # Catalyst from splitting it per field), the tagged extract (valid
+        # + invalid rows, plus the decoded payload) is cached, and the
+        # quarantine decision, the extract write and the 3 merges all read
+        # that cache — no second parse.
         #
         # r14: the invalid-row COUNT rides the batch's first full-scan
         # action as an observation below the validity filter (the gate's
@@ -349,20 +321,16 @@ class CdcPipeline:
         quarantine_flushed = False
 
         def flush_parse_quarantine() -> None:
-            # resolve the observed invalid count (bounded poll — falls back
-            # to a LIMIT-1 probe if no full-scan action ever ran, e.g. a
-            # failure before the first job) and land the raw payloads.
+            # resolve the observed invalid count (a wait bounded at 5 s —
+            # falls back to a LIMIT-1 probe if no full-scan action ever
+            # ran, e.g. a failure before the first job) and land the raw
+            # payloads.
             nonlocal quarantine_flushed
             if quarantine_flushed:
                 return
             quarantine_flushed = True
-            jo = getattr(obs_bad, "_jo", None)
-            deadline = _time.monotonic() + 5.0
-            n_bad = None
-            while jo is not None and _time.monotonic() < deadline:
-                if jo.getRowOrEmpty().isDefined():
-                    n_bad = obs_bad.get["n_bad"]
-                    break
+            m_bad = await_observation(obs_bad, _time.monotonic() + 5.0)
+            n_bad = None if m_bad is None else m_bad["n_bad"]
             bad = cached.filter(F.col("eventID").isNull()).select(
                 "approximatearrivaltimestamp",
                 "partitionkey",
@@ -440,8 +408,6 @@ class CdcPipeline:
             from concurrent.futures import ThreadPoolExecutor
 
             def run_merge(spec):
-                from ..operators.merge import finalize_merge_stats
-
                 tm = _time.perf_counter()
                 table = self.targets[spec.name]
                 stats: dict = {}
@@ -456,27 +422,12 @@ class CdcPipeline:
                 mv_rows = self._apply_maintained_views(
                     table, spec, extract, batch_id, watermark=wm
                 )
-                if hasattr(table, "merge"):  # partition-scoped backend
-                    table.merge(
-                        extract, spec, sync_ts, stats=stats, watermark=wm
-                    )
-                else:
-                    merged = incremental_merge(
-                        table.read(),
-                        extract,
-                        spec,
-                        sync_ts,
-                        stats=stats,
-                        watermark=wm,
-                    )
-                    table.overwrite(merged)
-                    finalize_merge_stats(stats)  # counts observed by the write
+                table.merge(extract, spec, sync_ts, stats=stats, watermark=wm)
                 nw = stats.get("next_watermark")
                 if nw is not None and nw != _MERGE_EPOCH:
                     self._watermarks[spec.name] = nw
                 # expose the merge's full diagnostics (incl. the per-phase
-                # wall clock the partitioned backend records) for the last
-                # processed batch
+                # wall clock) for the last processed batch
                 self.last_merge_stats[spec.name] = stats
                 stages[f"merge_{spec.name}_sec"] = round(
                     _time.perf_counter() - tm, 4
